@@ -323,7 +323,9 @@ def run_build_corpus(spark, pages: DataFrame, output_dir: str,
                      **kw) -> dict:
     """Driver wrapper: composed build + checkpointed bucket-wise write
     (resume skips done buckets) + per-bucket lineage audit rows keyed
-    by run_id (idempotent via dynamic partition overwrite)."""
+    by run_id, aggregated from the committed output (idempotent via
+    dynamic partition overwrite)."""
+    from social_media_pii_scrubber_spark.plans.audit import append_audit
     from social_media_pii_scrubber_spark.plans.checkpoint import (
         write_with_checkpoints,
     )
@@ -334,18 +336,8 @@ def run_build_corpus(spark, pages: DataFrame, output_dir: str,
         buckets_per_batch=buckets_per_batch, fail_after=fail_after,
     )
     if audit_path:
-        lineage = (
-            spark.read.parquet(f"{output_dir}/data")
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("rows_kept"),
-                 F.sum("n_tok").alias("tokens_kept"))
-            .withColumn("run_id", F.lit(run_id))
-        )
-        (
-            lineage.repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id")
-            .parquet(audit_path)
-        )
+        lineage = result["data"].groupBy("bucket").agg(
+            F.count(F.lit(1)).alias("rows_kept"),
+            F.sum("n_tok").alias("tokens_kept"))
+        append_audit(lineage, audit_path, run_id)
     return result

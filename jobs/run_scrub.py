@@ -13,9 +13,16 @@ Sandbox smoke (generates its own corpus):
 
     python jobs/run_scrub.py --generate 100000 --output /tmp/scrub_out
 
+The job makes one pass: each write batch scores only its own buckets
+and is counted by an Observation on that write; the per-bucket audit
+rows are aggregated from the committed output, not from a second run of
+the pipeline.
+
 The job is resumable: re-running with the same --output skips buckets
 already marked done in the checkpoint manifest (idempotent via dynamic
-partition overwrite).
+partition overwrite), and rewrites the run's audit from every committed
+bucket. The printed ``audit metrics`` count the rows THIS invocation
+wrote; a fully resumed run writes none and prints zeros.
 """
 
 from __future__ import annotations
@@ -25,10 +32,12 @@ import sys
 from datetime import datetime
 from pathlib import Path
 
+from pyspark.sql import functions as F
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from social_media_pii_scrubber_spark.config import ScrubConfig
-from social_media_pii_scrubber_spark.plans.audit import append_audit, audit_run_exists
+from social_media_pii_scrubber_spark.plans.audit import append_audit, bucket_lineage
 from social_media_pii_scrubber_spark.plans.checkpoint import write_with_checkpoints
 from social_media_pii_scrubber_spark.plans.pipeline import filter_scrub_pipeline
 from social_media_pii_scrubber_spark.session import get_spark
@@ -76,28 +85,23 @@ def main(argv=None) -> None:
 
     result = filter_scrub_pipeline(
         pages, cfg, use_model_udfs=args.use_model_udfs, use_ner=args.ner,
-        use_toxicity=args.toxicity, with_observe=True,
-        from_html=args.from_html,
+        use_toxicity=args.toxicity, from_html=args.from_html,
     )
     stats = write_with_checkpoints(
-        result.df, args.output, n_buckets=args.buckets
+        result.df, args.output, n_buckets=args.buckets,
+        metrics={
+            "rows_in_window": F.count(F.lit(1)),
+            "rows_kept": F.sum(F.col("keep").cast("long")),
+            "rows_dropped": F.sum((~F.col("keep")).cast("long")),
+        },
     )
-    # Audit is overwrite-per-run_id (idempotent). A fully-resumed run that
-    # wrote nothing and already has its audit partition skips the extra
-    # pipeline pass the aggregation would cost.
-    audit_path = args.audit or f"{args.output}/audit"
-    wrote_audit = bool(stats["written_buckets"]) or not audit_run_exists(
-        spark, audit_path, args.run_id
-    )
-    if wrote_audit:
-        append_audit(result.df, audit_path, args.run_id, n_buckets=args.buckets)
+    # lineage of every committed bucket (this run's and resumed ones),
+    # overwrite-per-run_id, so a re-run rewrites the same rows
+    append_audit(bucket_lineage(stats["data"], args.run_id),
+                 args.audit or f"{args.output}/audit", args.run_id)
     print(f"run {args.run_id}: wrote buckets {len(stats['written_buckets'])}, "
           f"resumed past {len(stats['skipped_buckets'])}")
-    # Observation.get BLOCKS until an action runs on the observed frame;
-    # a fully-resumed run executes none, so only read it when one did.
-    ran_action = bool(stats["written_buckets"]) or wrote_audit
-    if result.observation is not None and ran_action:
-        print(f"audit metrics: {result.observation.get}")
+    print(f"audit metrics: {stats['metrics']}")
     spark.stop()
 
 

@@ -168,10 +168,12 @@ def top_bigram_fraction_expr(text: Column) -> Column:
 
     r07: the words array is let-bound — the old form referenced
     ``words_expr(text)`` four times (zip_with's two arguments, the
-    slice length, the denominator) and codegen CSE does not dedupe the
-    repeated split(trim(lower)) trees, so every call paid the
-    tokenization ~4×. The bound slot makes it once; arithmetic is
-    unchanged, values bit-identical to the SQL twin.
+    slice length, the denominator) plus once in the ``n>=2`` guard, and
+    codegen CSE does not dedupe the repeated split(trim(lower)) trees,
+    so every call paid the tokenization five times (the before-plan,
+    plans/r07/quality_top_bigram_before.txt, shows all five). The bound
+    slot makes it once; arithmetic is unchanged, values bit-identical
+    to the SQL twin.
     """
     from .text import let_expr
 

@@ -13,10 +13,8 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from ..config import ScrubConfig
 
 
 def in_date_range_expr(ts: Column, first_date: datetime, last_date: datetime) -> Column:
@@ -29,11 +27,6 @@ def in_date_range_sql(ts: str, first_date: datetime, last_date: datetime) -> str
         f"({ts} between timestamp '{first_date:%Y-%m-%d %H:%M:%S}'"
         f" and timestamp '{last_date:%Y-%m-%d %H:%M:%S}')"
     )
-
-
-def filter_by_date(df: DataFrame, ts_col: str, cfg: ScrubConfig) -> DataFrame:
-    """P2 — filter rows to the configured window (smparserbase.py:110-112)."""
-    return df.filter(in_date_range_expr(F.col(ts_col), cfg.first_date, cfg.last_date))
 
 
 def week_bin_expr(ts: Column, last_date: datetime) -> Column:

@@ -11,7 +11,6 @@ smparsers.py:220-231) generalized to the web-page table:
       → date-window filter        (pushed to the scan)
       → PII scrub                 (native regexp_replace bank)
       → keep/drop decision
-      → audit metrics via observe()
 
 Stage order matters for the physical plan: the date filter is expressed
 BEFORE any UDF stage so Catalyst pushes it to the scan (PushedFilters)
@@ -24,7 +23,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ScrubConfig
@@ -41,7 +40,6 @@ MAX_PERPLEXITY = 40.0  # junk gate; English text scores ~15-25 under the model
 @dataclass
 class PipelineResult:
     df: DataFrame
-    observation: Observation | None
 
 
 def quality_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -81,7 +79,6 @@ def filter_scrub_pipeline(
     use_model_udfs: bool = False,
     use_ner: bool = False,
     use_toxicity: bool = False,
-    with_observe: bool = False,
     from_html: bool = False,
 ) -> PipelineResult:
     """The flagship filter+scrub plan over the web-page table.
@@ -149,16 +146,6 @@ def filter_scrub_pipeline(
             "scrubbed_text", clean_text_pandas_udf(cfg)(F.col("scrubbed_text"))
         )
 
-    obs = None
-    if with_observe:
-        obs = Observation("audit")
-        df = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_in_window"),
-            F.sum(F.col("keep").cast("long")).alias("rows_kept"),
-            F.sum((~F.col("keep")).cast("long")).alias("rows_dropped"),
-        )
-
     out = df.select(
         "url", "warc_ts", "lang", "pred_lang",
         "n_chars", "n_words", "mean_word_len", "symbol_ratio",
@@ -167,7 +154,7 @@ def filter_scrub_pipeline(
         *(["tox_score"] if use_toxicity else []),
         "keep", "scrubbed_text",
     )
-    return PipelineResult(df=out, observation=obs)
+    return PipelineResult(df=out)
 
 
 def pipeline_oracle_sql(pages_cte: str, cfg: ScrubConfig | None = None,

@@ -74,13 +74,6 @@ def ig_username_from_profile(profile: DataFrame) -> str:
     return row.u if row else ""
 
 
-def fb_friends_counts(friends: DataFrame, removed: DataFrame) -> DataFrame:
-    """parse_friends (smparsers.py:26-36): two global counts, one row."""
-    a = friends.agg(F.count(F.lit(1)).alias("Total Friends"))
-    b = removed.agg(F.count(F.lit(1)).alias("Removed Friends"))
-    return a.crossJoin(b)
-
-
 def fb_reactions_report(reactions: DataFrame, cfg: ScrubConfig) -> DataFrame:
     """parse_reactions (smparsers.py:38-73): window filter → type +
     last-match-wins category → pivot with per-type Total.
@@ -357,13 +350,6 @@ def fb_comments_payload(comments: DataFrame, rem_comments: DataFrame,
 # Instagram (smparsers.py:234-346)
 # =========================================================================
 
-def ig_follow_counts(followers: DataFrame, following: DataFrame) -> DataFrame:
-    """parse_follow (smparsers.py:274-284)."""
-    a = followers.agg(F.count(F.lit(1)).alias("Followers"))
-    b = following.agg(F.count(F.lit(1)).alias("Following"))
-    return a.crossJoin(b)
-
-
 def ig_comments_routing(comments: DataFrame, cfg: ScrubConfig) -> DataFrame:
     """parse_comments (smparsers.py:245-272): window filter → scrub →
     blank-after-scrub drop (P4) → route by author == username (P8).
@@ -475,13 +461,6 @@ def tt_follow_counts(follower: DataFrame, following: DataFrame,
     return n(follower, "Followers").crossJoin(n(following, "Following"))
 
 
-def tt_likes_payload(likes: DataFrame, cfg: ScrubConfig) -> DataFrame:
-    """parse_user_likes (smparsers.py:413-423): filter + {{URL}}."""
-    return likes.filter(
-        in_date_range_expr(F.to_timestamp("Date"), cfg.first_date, cfg.last_date)
-    ).select("Date", F.lit("{{URL}}").alias("Video Link"))
-
-
 def tt_video_browsing(browsing: DataFrame, favorites: DataFrame,
                       likes: DataFrame, cfg: ScrubConfig) -> DataFrame:
     """parse_video_browsing (smparsers.py:425-456): window filter, J1
@@ -511,14 +490,6 @@ def tt_user_videos(videos: DataFrame, cfg: ScrubConfig) -> DataFrame:
     return videos.filter(
         in_date_range_expr(F.to_timestamp("Date"), cfg.first_date, cfg.last_date)
     ).select("Date", F.lit("{{URL}}").alias("Video Link"), F.col("Like(s)"))
-
-
-def tt_comments_payload(comments: DataFrame, cfg: ScrubConfig) -> DataFrame:
-    """parse_comments_from_others (smparsers.py:458-469)."""
-    clean = clean_text_pandas_udf(cfg)
-    return comments.filter(
-        in_date_range_expr(F.to_timestamp("Date"), cfg.first_date, cfg.last_date)
-    ).select("Date", clean(F.col("Comment")).alias("Comment"))
 
 
 # =========================================================================

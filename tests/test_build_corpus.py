@@ -181,6 +181,33 @@ def test_run_build_corpus_resume_skips_done_buckets(spark, tmp_path):
     assert audit.agg(F.sum("rows_kept")).first()[0] == full.count()
 
 
+def test_run_build_corpus_resumes_from_crash_before_mark_done(
+        spark, tmp_path, crash_before_mark_done):
+    kw = dict(id_col="doc_id", oracle_profile=True,
+              classifier_bias=100.0,
+              budgets={"en": 100_000, "de": 100_000},
+              pack_budget=128, pack_buckets=4)
+    wrapper = dict(n_buckets=4, buckets_per_batch=2)
+    pages = _pages(spark)
+
+    def run(name):
+        return run_build_corpus(spark, pages, str(tmp_path / name),
+                                audit_path=str(tmp_path / name / "audit"),
+                                **wrapper, **kw)
+
+    run("clean")
+    with crash_before_mark_done(3):  # batch 2 written, none of it marked
+        run("crashed")
+    res = run("crashed")
+    assert (res["skipped_buckets"], res["written_buckets"]) == ([0, 1], [2, 3])
+    for part in ("data", "audit"):
+        a = spark.read.parquet(str(tmp_path / "clean" / part))
+        b = spark.read.parquet(str(tmp_path / "crashed" / part))
+        assert b.count() == a.count()  # the rewritten batch replaced its rows
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+    assert b.agg(F.sum("rows_kept")).first()[0] == res["data"].count()
+
+
 def test_pii_density_gate_drops_contact_dump(spark):
     # doc 5 is good prose plus a contact block: it passes the heuristic
     # quality gate (it reads like text) but its PII density is way past

@@ -313,3 +313,36 @@ def test_fix_mojibake_pure_codegen_projection(spark, sf_dir):
     assert "ArrowEvalPython" not in p
     assert "Exchange hashpartitioning" not in scan_to_agg.replace(
         "Exchange SinglePartition", "")  # only the final agg gather
+
+
+def test_run_scrub_batch_filter_below_python_udfs(tmp_path, monkeypatch,
+                                                  run_scrub_main):
+    """Each write batch of jobs/run_scrub must score only its own
+    buckets: the batch's bucket Filter sits BELOW ArrowEvalPython (it
+    moved down to the scan) and the batch's CollectMetrics sits above
+    it. An observe() below the filter is opaque to pushdown and pins
+    the filter above the UDFs, so every batch scores the whole input."""
+    from pyspark.sql import DataFrameWriter
+
+    frames = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        if path.endswith("/data"):
+            frames.append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    run_scrub_main(["--generate", "200", "--output", str(tmp_path / "out"),
+                    "--buckets", "4"])  # one batch: buckets 0-3, model UDFs on
+    lines = plan_of(frames[0]).split("\n")
+
+    def line_of(pred):
+        return next(i for i, line in enumerate(lines) if pred(line))
+
+    udf = line_of(lambda line: "ArrowEvalPython" in line)
+    bucket_filter = line_of(
+        lambda line: "Filter" in line and "IN (0,1,2,3)" in line)
+    metrics = line_of(lambda line: "CollectMetrics" in line)
+    assert metrics < udf < bucket_filter, "\n".join(
+        line[:160] for line in lines)
